@@ -228,6 +228,7 @@ object Iterate {
       if (i == 0) e.unpersist()
       freeFrame(prev) // superseded frame: the new ranks are materialized
     }
+    if (iters == 0) e.unpersist() // no superstep ran to free it
     ew.unpersist(); verts.unpersist()
     ranks
   }
@@ -1184,23 +1185,28 @@ object Iterate {
     // canonical edge contributes exactly 2 to Σdeg, so the former separate
     // count pass over `e` and the crossJoin stitching it back are gone —
     // one aggregate tree total. Σdeg is even, the division exact.
+    // over an empty (or self-loop-only) edge set the aggregates see zero
+    // rows and sum/max give NULL; the reference reports 0 for every count
+    // and NaN for both ratios (which would divide by zero)
+    def zeroIfEmpty(c: Column) = coalesce(c.cast("long"), lit(0L))
     val vm = deg.agg(
       count(lit(1)).as("n_vertices"),
-      (sum(col("deg")) / 2).cast("long").as("n_edges"),
-      sum(col("deg") * (col("deg") - 1) / 2).as("n_triplets"),
-      max(col("deg")).as("max_degree"),
-      max(col("deg") * (col("deg") - 1) / 2).as("max_triplets"))
+      zeroIfEmpty(sum(col("deg")) / 2).as("n_edges"),
+      zeroIfEmpty(sum(col("deg") * (col("deg") - 1) / 2)).as("n_triplets"),
+      zeroIfEmpty(max(col("deg"))).as("max_degree"),
+      zeroIfEmpty(max(col("deg") * (col("deg") - 1) / 2)).as("max_triplets"))
+    def ratio(c: Column) = when(col("n_vertices") === 0, lit(Double.NaN)).otherwise(c)
     vm.select(
       col("n_vertices"),
       col("n_edges"),
-      (col("n_edges").cast("double") * 2.0 / col("n_vertices").cast("double"))
+      ratio(col("n_edges").cast("double") * 2.0 / col("n_vertices").cast("double"))
         .as("avg_degree"),
-      (col("n_edges").cast("double") /
+      ratio(col("n_edges").cast("double") /
         (col("n_vertices") * (col("n_vertices") - 1) / 2).cast("double"))
         .as("density"),
-      col("n_triplets").cast("long").as("n_triplets"),
+      col("n_triplets"),
       col("max_degree"),
-      col("max_triplets").cast("long").as("max_triplets"))
+      col("max_triplets"))
   }
 
   /** Whole-graph EDGE METRICS — the Gelly analytic (reference

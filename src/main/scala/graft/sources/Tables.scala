@@ -1,8 +1,11 @@
 package graft.sources
 
+import java.io.FileNotFoundException
+import java.util.concurrent.ConcurrentHashMap
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
+import org.apache.spark.sql.types.{LongType, StructType, TimestampNTZType, TimestampType}
 
 /** Star-schema loaders.
   *
@@ -28,8 +31,52 @@ object Tables {
     * is skipped (guard below). */
   private val computeHeavy = Set("documents", "embeddings")
 
+  /** Session values that change what parquet schema inference returns. */
+  private val inferenceConfs = Seq(
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.mergeSchema",
+    "spark.sql.caseSensitive")
+
+  /** Inferred schema per single-file table, keyed by qualified path. The
+    * stamp (length, modification time, inference confs) decides whether the
+    * entry is still valid; a new stamp replaces it, so there is one entry
+    * per path. Only the schema is kept, never the DataFrame: two loads of
+    * one table must get distinct expression IDs or self-joins break. */
+  private case class Stamp(len: Long, mtime: Long, confs: Seq[Option[String]])
+  private val schemas = new ConcurrentHashMap[String, (Stamp, StructType)]()
+
+  /** Reads one table. Spark infers a parquet schema with a one-task job on
+    * every `spark.read.parquet`; a single-file table whose stamp is
+    * unchanged skips that job and reads with the schema inferred before.
+    * Directory inputs keep Spark's inference. */
+  private def readParquet(spark: SparkSession, file: String): (DataFrame, Boolean) = {
+    val path = new Path(file)
+    val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val status =
+      try Some(fs.getFileStatus(path)).filter(_.isFile)
+      catch { case _: FileNotFoundException => None }
+    status match {
+      case None => (spark.read.parquet(file), false)
+      case Some(st) =>
+        val key = fs.makeQualified(path).toString
+        val stamp = Stamp(st.getLen, st.getModificationTime,
+          inferenceConfs.map(spark.conf.getOption))
+        val df = Option(schemas.get(key)).collect { case (`stamp`, s) => s } match {
+          case Some(cached) => spark.read.schema(cached).parquet(file)
+          case None =>
+            val inferred = spark.read.parquet(file)
+            schemas.put(key, (stamp, inferred.schema))
+            inferred
+        }
+        (df, true)
+    }
+  }
+
   def load(spark: SparkSession, dir: String, name: String): DataFrame = {
-    val raw = spark.read.parquet(s"$dir/$name.parquet")
+    val (raw, singleFile) = readParquet(spark, s"$dir/$name.parquet")
     // Spark 4 cannot read parquet TIMESTAMP(NANOS) natively; sessions set
     // spark.sql.legacy.parquet.nanosAsLong=true, which surfaces `ts` as long
     // nanos. Convert back to a microsecond timestamp (`div` keeps 64-bit
@@ -57,7 +104,7 @@ object Tables {
       acc.withColumn(f.name, col(f.name).cast(TimestampType))
     }
     val p = spark.sparkContext.defaultParallelism
-    if (computeHeavy(name) && new java.io.File(s"$dir/$name.parquet").isFile)
+    if (computeHeavy(name) && singleFile)
       df.repartition(p) // single-file scan: spread expression work
     else df
   }

@@ -96,6 +96,38 @@ class EdgeCaseSpec extends AnyFunSuite with SparkTest {
     assert(r == Map(1L -> 0.5, 2L -> 0.5), s"symmetric 2-cycle must stay uniform: $r")
   }
 
+  test("vertexMetrics on an empty or self-loop-only edge set: 0 counts and NaN " +
+       "ratios (the reference's answer), never NULL") {
+    val empty = Seq.empty[(Long, Long)].toDF("src", "dst")
+    val loops = Seq((1L, 1L), (2L, 2L)).toDF("src", "dst")
+    for ((name, edges) <- Seq("empty" -> empty, "self-loops" -> loops)) {
+      val r = Iterate.vertexMetrics(edges, "src", "dst").collect()
+      assert(r.length == 1, name)
+      val row = r.head
+      assert(!row.anyNull, s"$name: $row")
+      for (c <- Seq("n_vertices", "n_edges", "n_triplets", "max_degree", "max_triplets"))
+        assert(row.getAs[Long](c) == 0L, s"$name.$c: $row")
+      for (c <- Seq("avg_degree", "density"))
+        assert(row.getAs[Double](c).isNaN, s"$name.$c: $row")
+    }
+  }
+
+  test("pageRank with iters = 0 leaves no cached frame behind") {
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet
+    val edges = Seq((1L, 2L), (2L, 3L), (3L, 1L)).toDF("src", "dst")
+    val ranks = Iterate.pageRank(edges, "src", "dst", iters = 0)
+    assert(ranks.collect().map(_.getDouble(1)).toSeq == Seq.fill(3)(0.333333333))
+    // the returned frame is the caller's; free its lineage cut the way the
+    // iteration loops free a superseded frame
+    ranks.queryExecution.logical.foreach {
+      case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd.unpersist(false)
+      case _ => ()
+    }
+    val left = sc.getPersistentRDDs.keySet -- before
+    assert(left.isEmpty, s"persistent RDDs left behind: ${left.map(sc.getPersistentRDDs)}")
+  }
+
   test("ssspWorkset == sssp round-for-round, with early exit on an empty frontier") {
     val edges = Seq((1L, 2L, 1.0), (2L, 3L, 0.5), (3L, 2L, 0.25), (4L, 5L, 2.0))
       .toDF("src", "dst", "w")

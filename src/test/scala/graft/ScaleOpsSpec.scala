@@ -395,6 +395,9 @@ class ScaleOpsSpec extends AnyFunSuite with SparkTest {
       assert(new java.io.File(dir).listFiles != null &&
         new java.io.File(dir).listFiles.nonEmpty,
         "no checkpoint files written — reliable path did not engage")
-    } finally spark.conf.set("graft.iterate.reliableCheckpoint", "false")
+    } finally {
+      spark.conf.set("graft.iterate.reliableCheckpoint", "false")
+      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
+    }
   }
 }

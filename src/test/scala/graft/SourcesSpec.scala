@@ -1,6 +1,11 @@
 package graft
 
-import java.nio.file.Files
+import java.nio.file.{Files, Paths, StandardCopyOption}
+import java.util.concurrent.{CountDownLatch, TimeUnit}
+import java.util.concurrent.atomic.AtomicInteger
+import scala.util.Try
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.scalatest.funsuite.AnyFunSuite
 import graft.sources.Tables
@@ -32,6 +37,114 @@ class SourcesSpec extends AnyFunSuite with SparkTest {
             "must normalize (nanos-as-long and TIMESTAMP_NTZ both break CEP row access)")
         assert(f.dataType != LongType && f.dataType != TimestampNTZType)
       }
+    }
+  }
+
+  /** Spark jobs `body` starts, counted by a listener. Events reach the
+    * listener on the listener bus thread, so a marker job run after `body`
+    * shows when every job `body` started has been seen. */
+  private def jobsStartedBy(body: => Unit): Int = {
+    val sc = spark.sparkContext
+    val started = new AtomicInteger()
+    val markerSeen = new CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(js: SparkListenerJobStart): Unit =
+        Option(js.properties).flatMap(p => Option(p.getProperty("graft.test.span"))) match {
+          case Some("body") => started.incrementAndGet()
+          case Some("marker") => markerSeen.countDown()
+          case _ => ()
+        }
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setLocalProperty("graft.test.span", "body")
+      body
+      sc.setLocalProperty("graft.test.span", "marker")
+      sc.parallelize(Seq(1), 1).count()
+      assert(markerSeen.await(60, TimeUnit.SECONDS), "marker job never reached the listener")
+      started.get
+    } finally {
+      sc.setLocalProperty("graft.test.span", null)
+      sc.removeSparkListener(listener)
+    }
+  }
+
+  /** Writes `df` as ONE parquet file at `file`, the shape of every table in
+    * the test data. */
+  private def writeSingleFile(df: DataFrame, file: String): Unit = {
+    val staging = tmp()
+    df.coalesce(1).write.mode("overwrite").parquet(staging)
+    val part = new java.io.File(staging).listFiles
+      .find(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet")).get
+    Files.move(part.toPath, Paths.get(file), StandardCopyOption.REPLACE_EXISTING)
+  }
+
+  test("Tables.load infers a file's schema once: a second load starts no Spark job") {
+    val d = tmp()
+    writeSingleFile(Seq((1L, "a"), (2L, "b")).toDF("k", "v"), s"$d/t.parquet")
+    assert(jobsStartedBy(Tables.load(spark, d, "t")) > 0,
+      "the first load should run Spark's schema inference job")
+    assert(jobsStartedBy(Tables.load(spark, d, "t")) == 0,
+      "a second load of an unchanged file must reuse the inferred schema")
+  }
+
+  test("Tables.load picks up a file rewritten at the same path with a new schema") {
+    val d = tmp()
+    writeSingleFile(Seq((1L, "a")).toDF("k", "v"), s"$d/t.parquet")
+    assert(Tables.load(spark, d, "t").columns.toSeq == Seq("k", "v"))
+    writeSingleFile(Seq((2, 3.5, "x")).toDF("id", "score", "tag"), s"$d/t.parquet")
+    val again = Tables.load(spark, d, "t")
+    assert(again.columns.toSeq == Seq("id", "score", "tag"))
+    assert(again.as[(Int, Double, String)].collect().toSeq == Seq((2, 3.5, "x")))
+  }
+
+  test("Tables.load follows spark.sql.legacy.parquet.nanosAsLong between loads") {
+    // Spark cannot write TIMESTAMP(NANOS); write it with parquet's own writer
+    import org.apache.hadoop.fs.Path
+    import org.apache.parquet.example.data.simple.SimpleGroupFactory
+    import org.apache.parquet.hadoop.example.ExampleParquetWriter
+    import org.apache.parquet.schema.MessageTypeParser
+    val d = tmp()
+    val file = s"$d/t.parquet"
+    val schema = MessageTypeParser.parseMessageType(
+      "message t { required int32 id; required int64 ts_ns (TIMESTAMP(NANOS,true)); }")
+    val w = ExampleParquetWriter.builder(new Path(file)).withType(schema)
+      .withConf(spark.sparkContext.hadoopConfiguration).build()
+    try w.write(new SimpleGroupFactory(schema).newGroup()
+      .append("id", 1).append("ts_ns", 1700000000123456789L))
+    finally w.close()
+    val key = "spark.sql.legacy.parquet.nanosAsLong"
+    // what plain Spark inference gives under the current conf: the schema,
+    // or the error class it fails with
+    def outcome(df: => DataFrame): Either[String, String] =
+      Try(df.schema.simpleString).toEither.left.map {
+        case e: org.apache.spark.SparkThrowable => e.getCondition
+        case e => throw e
+      }
+    val prior = spark.conf.get(key)
+    try {
+      for (flag <- Seq("true", "false", "true")) {
+        spark.conf.set(key, flag)
+        val loaded = outcome(Tables.load(spark, d, "t"))
+        assert(loaded == outcome(spark.read.parquet(file)), s"nanosAsLong=$flag")
+        if (flag == "true") assert(loaded == Right("struct<id:int,ts_ns:bigint>"))
+      }
+    } finally spark.conf.set(key, prior)
+  }
+
+  test("Tables.load returns the same rows and schema from the memo as from inference") {
+    // a directory input is never memoized: the same file inside a directory
+    // named like the table is loaded through Spark's inference every time
+    val d = tmp()
+    Tables.all.foreach { n =>
+      Files.createDirectories(Paths.get(s"$d/$n.parquet"))
+      Files.copy(Paths.get(s"$sfDir/$n.parquet"), Paths.get(s"$d/$n.parquet/part-0.parquet"))
+      Tables.load(spark, sfDir, n)
+      val memo = Tables.load(spark, sfDir, n)
+      val inferred = Tables.load(spark, d, n)
+      assert(memo.schema == inferred.schema, n)
+      assert(memo.collect().map(_.toString).sorted.toSeq ==
+        inferred.collect().map(_.toString).sorted.toSeq, n)
     }
   }
 
